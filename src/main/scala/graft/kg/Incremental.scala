@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.artifact.Builder
 import graft.lake.LakeTable
 import graft.mine.Miner
-import graft.model.{Doc, WebPage}
+import graft.model.WebPage
 import graft.score.Scorer
 import graft.tag.Tagger
 
@@ -61,6 +61,12 @@ import graft.tag.Tagger
  * re-running `addEpoch` with the SAME delta resumes/no-ops idempotently
  * (value-keyed skips + deterministic rewrites), a DIFFERENT delta for a
  * committed epoch fails loudly, and `currentEpoch` is derived from the ledger.
+ *
+ * Every layer commits through `LakeTable.commit`, the commit-and-mark rule
+ * shared with `KgPipeline.runCheckpointed`, except an epoch's appends: their
+ * marker names the epoch (`cleaned@e{N}`…) rather than the stage appended to,
+ * and lands even when the epoch appended nothing. Tagging is
+ * `Tagger.tagSpansTs`, the one tag function, projected by `Tagger.mentions`.
  *
  * == What stays corpus-scale ==
  * Per epoch: the carried-mention rewrite (mention-scale, ~100× smaller than
@@ -172,8 +178,7 @@ object Incremental {
    * and the epoch number rides along for cheap `epoch < E` pruning. */
   private def epochBucketed(df: DataFrame, key: String, epoch: Int, buckets: Int) =
     df.withColumn("epoch", lit(epoch))
-      .withColumn("bucket",
-        concat(lit(s"e$epoch-"), pmod(xxhash64(col(key)), lit(buckets.toLong))))
+      .withColumn("bucket", concat(lit(s"e$epoch-"), LakeTable.bucket(key, buckets)))
 
   /** Raw (minCount = 1) per-epoch count layers — exact additivity under merge. */
   private def rawMine(docs: DataFrame, tokensCol: String, cfg: KgPipeline.KgConfig) =
@@ -186,31 +191,12 @@ object Incremental {
       .agg(sum("count").as("count"))
       .filter(col("count") >= floor)
 
-  private def writeAndMark(lake: LakeTable, df: DataFrame, partCol: String,
-      stage: String, force: Boolean): Unit = {
-    if (!lake.isComplete(stage)) {
-      if (force) lake.rewritePartitions(df, partCol, stage)
-      else lake.resumableWrite(df, partCol, stage)
-      if (lake.committedPartitions(stage).nonEmpty) lake.markComplete(stage)
-    }
-  }
-
-  /** (url, warc_ts, start, end, phrase_id, label) rows from a tag pass. */
-  private def mentionRows(spark: SparkSession, docs: DataFrame,
-      model: graft.artifact.TagModel, cfg: KgPipeline.KgConfig): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model)
-    // warc_ts carried through the closure — same round-6 swap as KgPipeline
-    // (no join-back exchange, no token echo in the tag output)
-    val tagged = Tagger.tagSpansTs(spark,
-      docs.select(col("docId"), col("warc_ts"), col("tokens")).as[graft.model.DocTs],
-      bc, cfg.tag).toDF()
-    tagged
-      .select(col("docId").as("url"), col("warc_ts"), explode(col("spans")).as("s"))
-      .select(col("url"), col("warc_ts"),
-        col("s.start").as("start"), col("s.end").as("end"),
-        col("s.phraseId").as("phrase_id"), col("s.label").as("label"))
-  }
+  /** The merged background counts at the background threshold, or the empty
+   * table when no epoch committed a background partition. */
+  private def mergedBackground(spark: SparkSession, lake: LakeTable,
+      cfg: KgPipeline.KgConfig): DataFrame =
+    if (lake.committedPartitions("background_counts").isEmpty) KgPipeline.emptyCounts(spark)
+    else mergedCounts(lake, "background_counts", math.max(1, cfg.mine.minCount / 2))
 
   /** Epoch-0 full build, committed with the count layers future epochs merge
    * into. Idempotent: a rerun over the same corpus resumes/no-ops. */
@@ -229,37 +215,29 @@ object Incremental {
     lake.resumableWrite(Seq(s"e0:$fp").toDF("fp").withColumn("part", col("fp")),
       "part", ledgerStage)
 
-    writeAndMark(lake,
-      epochBucketed(KgPipeline.cleanedDocs(pages, cfg), "docId", 0, buckets),
-      "bucket", "cleaned", force = false)
+    lake.commit(epochBucketed(KgPipeline.cleanedDocs(pages, cfg), "docId", 0, buckets),
+      "bucket", "cleaned")
     writeTokenIndex(lake, 0, buckets)
     val cleaned = lake.read("cleaned").select("docId", "warc_ts", "tokens")
-    writeAndMark(lake, epochBucketed(rawMine(cleaned, "tokens", cfg), "ngram", 0, buckets),
-      "bucket", "domain_counts", force = false)
+    lake.commit(epochBucketed(rawMine(cleaned, "tokens", cfg), "ngram", 0, buckets),
+      "bucket", "domain_counts")
     // background: non-lang pages' raw counts (KgPipeline.backgroundFromPages
-    // thresholds at max(1, minCount/2); here the threshold moves to read time)
-    val bgDocs = pages.toDF().filter(col("lang") =!= cfg.lang)
-      .select(graft.corpus.Extract.tokenize(col("text")).as("tokens"))
-    writeAndMark(lake, epochBucketed(rawMine(bgDocs, "tokens", cfg), "ngram", 0, buckets),
-      "bucket", "background_counts", force = false)
-    lake.markComplete("background_counts") // an all-`lang` corpus commits nothing
+    // thresholds at max(1, minCount/2); here the threshold moves to read
+    // time); an all-`lang` corpus commits nothing, and that is its result
+    lake.commit(epochBucketed(rawMine(KgPipeline.backgroundDocs(pages, cfg), "tokens", cfg),
+      "ngram", 0, buckets), "bucket", "background_counts", emptyIsValid = true)
 
-    val domain = mergedCounts(lake, "domain_counts", cfg.mine.minCount)
-    val bg =
-      if (lake.committedPartitions("background_counts").nonEmpty)
-        mergedCounts(lake, "background_counts", math.max(1, cfg.mine.minCount / 2))
-      else spark.emptyDataFrame.select(lit("").as("ngram"), lit(0L).as("count")).limit(0)
-    val plan = KgPipeline.buildFromCounts(spark, cleaned, domain, bg, cfg)
-    writeAndMark(lake, plan.phrases.withColumn("part", lit("all")),
-      "part", scoredStage(0), force = true)
-    writeAndMark(lake, plan.mentions.withColumn("bucket",
-      pmod(xxhash64(col("url")), lit(buckets.toLong))), "bucket", mentionsStage(0), force = true)
-    writeAndMark(lake, plan.entities.withColumn("bucket",
-      pmod(xxhash64(col("entity_id")), lit(buckets.toLong))), "bucket", entitiesStage(0),
-      force = true)
-    writeAndMark(lake, plan.triples.withColumn("bucket",
-      pmod(xxhash64(col("subj")), lit(buckets.toLong))), "bucket", triplesStage(0),
-      force = true)
+    val plan = KgPipeline.buildFromCounts(spark, cleaned,
+      mergedCounts(lake, "domain_counts", cfg.mine.minCount),
+      mergedBackground(spark, lake, cfg), cfg)
+    lake.commit(plan.phrases.withColumn("part", lit("all")), "part", scoredStage(0),
+      rewrite = true)
+    lake.commit(plan.mentions.withColumn("bucket", LakeTable.bucket("url", buckets)),
+      "bucket", mentionsStage(0), rewrite = true)
+    lake.commit(plan.entities.withColumn("bucket", LakeTable.bucket("entity_id", buckets)),
+      "bucket", entitiesStage(0), rewrite = true)
+    lake.commit(plan.triples.withColumn("bucket", LakeTable.bucket("subj", buckets)),
+      "bucket", triplesStage(0), rewrite = true)
     val nTriples = lake.read(triplesStage(0)).count()
     val nMentions = plan.mentions.count()
     val nPhrases = plan.phrases.count()
@@ -319,38 +297,24 @@ object Incremental {
     // per-epoch completion MARKER rides a virtual stage name, distinguishing
     // "this epoch's append finished" from "some buckets landed" (an empty
     // bucket is indistinguishable from a missing one in a value-keyed log)
-    if (!lake.isComplete(s"cleaned@e$epoch")) {
-      lake.resumableWrite(epochBucketed(deltaCleanedDf, "docId", epoch, buckets),
-        "bucket", "cleaned")
-      lake.markComplete(s"cleaned@e$epoch")
-    }
+    def append(stage: String, df: => DataFrame, key: String): Unit =
+      if (!lake.isComplete(s"$stage@e$epoch")) {
+        lake.resumableWrite(epochBucketed(df, key, epoch, buckets), "bucket", stage)
+        lake.markComplete(s"$stage@e$epoch")
+      }
+    append("cleaned", deltaCleanedDf, "docId")
     writeTokenIndex(lake, epoch, buckets)
     val deltaCleaned = lake.read("cleaned").filter(col("epoch") === epoch)
       .select("docId", "warc_ts", "tokens")
-    if (!lake.isComplete(s"domain_counts@e$epoch")) {
-      lake.resumableWrite(
-        epochBucketed(rawMine(deltaCleaned, "tokens", cfg), "ngram", epoch, buckets),
-        "bucket", "domain_counts")
-      lake.markComplete(s"domain_counts@e$epoch")
-    }
-    if (!lake.isComplete(s"background_counts@e$epoch")) {
-      val bgDocs = delta.toDF().filter(col("lang") =!= cfg.lang)
-        .select(graft.corpus.Extract.tokenize(col("text")).as("tokens"))
-      lake.resumableWrite(
-        epochBucketed(rawMine(bgDocs, "tokens", cfg), "ngram", epoch, buckets),
-        "bucket", "background_counts")
-      lake.markComplete(s"background_counts@e$epoch")
-    }
+    append("domain_counts", rawMine(deltaCleaned, "tokens", cfg), "ngram")
+    append("background_counts", rawMine(KgPipeline.backgroundDocs(delta, cfg), "tokens", cfg),
+      "ngram")
 
     // phrase-scale: merged counts → scored (== scoring the union corpus)
-    val domain = mergedCounts(lake, "domain_counts", cfg.mine.minCount)
-    val bg =
-      if (lake.committedPartitions("background_counts").nonEmpty)
-        mergedCounts(lake, "background_counts", math.max(1, cfg.mine.minCount / 2))
-      else spark.emptyDataFrame.select(lit("").as("ngram"), lit(0L).as("count")).limit(0)
-    val newScored = Scorer.score(domain, bg, cfg.score).persist()
-    writeAndMark(lake, newScored.withColumn("part", lit("all")),
-      "part", scoredStage(epoch), force = true)
+    val newScored = Scorer.score(mergedCounts(lake, "domain_counts", cfg.mine.minCount),
+      mergedBackground(spark, lake, cfg), cfg.score).persist()
+    lake.commit(newScored.withColumn("part", lit("all")), "part", scoredStage(epoch),
+      rewrite = true)
 
     val prevScored = lake.read(scoredStage(from))
     val added = newScored.join(prevScored.select("ngram"), Seq("ngram"), "left_anti")
@@ -395,9 +359,9 @@ object Incremental {
           case Some(docs) =>
             val (miniModel, _) =
               Builder.build(added.withColumnRenamed("domain_count", "count"))
-            val miniCfg = cfg.copy(tag = cfg.tag.copy(policy = "all", strictPolicy = false))
-            mentionRows(spark, docs.select("docId", "warc_ts", "tokens"),
-              miniModel, miniCfg).select("url")
+            val miniTag = cfg.tag.copy(policy = "all", strictPolicy = false)
+            Tagger.mentions(Tagger.tagSpansTs(spark, Tagger.docsTs(docs),
+              spark.sparkContext.broadcast(miniModel), miniTag)).select("url")
         }
       }
     val affectedUrls =
@@ -425,28 +389,26 @@ object Incremental {
       .join(affectedUrls.withColumnRenamed("url", "docId"), Seq("docId"), "left_semi")
       .unionByName(deltaCleaned)
       .persist()
-    val retagged = mentionRows(spark, retagDocs, model, cfg)
+    val retagged = Tagger.mentions(Tagger.tagSpansTs(spark, Tagger.docsTs(retagDocs),
+      spark.sparkContext.broadcast(model), cfg.tag))
 
     val mentions = carried.unionByName(retagged).persist()
-    writeAndMark(lake, mentions.withColumn("bucket",
-      pmod(xxhash64(col("url")), lit(buckets.toLong))), "bucket", mentionsStage(epoch),
-      force = true)
+    lake.commit(mentions.withColumn("bucket", LakeTable.bucket("url", buckets)),
+      "bucket", mentionsStage(epoch), rewrite = true)
 
     // entities: function of the scored table alone (LSH → CC → canonical)
     val edges = Linker.candidateEdges(newScored.select("phrase_id", "tokens"), cfg.link)
     val comps = ConnectedComponents.run(edges)
     val ents = Triples.entities(newScored, comps).persist()
-    writeAndMark(lake, ents.withColumn("bucket",
-      pmod(xxhash64(col("entity_id")), lit(buckets.toLong))), "bucket",
-      entitiesStage(epoch), force = true)
+    lake.commit(ents.withColumn("bucket", LakeTable.bucket("entity_id", buckets)),
+      "bucket", entitiesStage(epoch), rewrite = true)
 
     val triplesDf = Triples.materialize(
       lake.read(mentionsStage(epoch))
         .select("url", "warc_ts", "start", "end", "phrase_id", "label"),
       ents.select("phrase_id", "entity_id"), cfg.triple)
-    writeAndMark(lake, triplesDf.withColumn("bucket",
-      pmod(xxhash64(col("subj")), lit(buckets.toLong))), "bucket", triplesStage(epoch),
-      force = true)
+    lake.commit(triplesDf.withColumn("bucket", LakeTable.bucket("subj", buckets)),
+      "bucket", triplesStage(epoch), rewrite = true)
 
     val stats = EpochStats(
       epoch = epoch,

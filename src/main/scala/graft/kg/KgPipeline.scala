@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.artifact.Builder
 import graft.corpus.Extract
+import graft.lake.LakeTable
 import graft.mine.Miner
-import graft.model.{Doc, WebPage}
+import graft.model.WebPage
 import graft.score.Scorer
 import graft.tag.Tagger
 
@@ -19,6 +20,11 @@ import graft.tag.Tagger
  * is shuffle-free, so end-to-end cost at scale is dominated by the mine
  * aggregation and the triple materialization shuffles — both keyed on
  * high-cardinality values with map-side partial aggregation.
+ *
+ * The tag stage is `Tagger.tagSpansTs`, the one Dataset-level tag function,
+ * projected to mention rows by `Tagger.mentions`. The checkpointed run
+ * commits every layer through `LakeTable.commit` — the one commit-and-mark
+ * rule, shared with [[Incremental]] — bucketed by `LakeTable.bucket`.
  */
 object KgPipeline {
 
@@ -64,15 +70,24 @@ object KgPipeline {
       col("warc_ts"),
       Extract.tokenize(Extract.extractText(col("html"))).as("tokens"))
 
+  /** The background documents: the corpus' non-`lang` pages, tokenized from
+   * `text` — the input of every background count table (here and in
+   * [[Incremental]]). */
+  private[kg] def backgroundDocs(pages: Dataset[WebPage], cfg: KgConfig): DataFrame =
+    pages.toDF().filter(col("lang") =!= cfg.lang)
+      .select(Extract.tokenize(col("text")).as("tokens"))
+
+  /** An empty (ngram, count) table: the background of an all-`lang` corpus,
+   * whose background layer commits no partition. */
+  private[kg] def emptyCounts(spark: SparkSession): DataFrame =
+    spark.emptyDataFrame.select(lit("").as("ngram"), lit(0L).as("count")).limit(0)
+
   /** Background n-gram table derived from the corpus' non-`lang` pages —
    * deterministic and self-contained. */
-  def backgroundFromPages(pages: Dataset[WebPage], cfg: KgConfig): DataFrame = {
-    val other = pages.toDF().filter(col("lang") =!= cfg.lang)
-      .select(Extract.tokenize(col("text")).as("tokens"))
-    Miner.mine(other, "tokens",
+  def backgroundFromPages(pages: Dataset[WebPage], cfg: KgConfig): DataFrame =
+    Miner.mine(backgroundDocs(pages, cfg), "tokens",
       cfg.mine.copy(minCount = math.max(1, cfg.mine.minCount / 2), ordered = false))
       .select("ngram", "count")
-  }
 
   def build(spark: SparkSession, pages: Dataset[WebPage],
       background: Option[DataFrame] = None,
@@ -107,13 +122,10 @@ object KgPipeline {
   def buildFromCounts(spark: SparkSession, docs: DataFrame,
       domainCounts: DataFrame, background: DataFrame,
       cfg: KgConfig = KgConfig()): KgPlan = {
-    import spark.implicits._
-    val bg = background
-
     // scored is consumed by Builder.collect, the linker and the entity table —
     // persist the (small, thresholded) phrase set; Builder's stats aggregate
     // is the action that materializes it
-    val scored = Scorer.score(domainCounts, bg, cfg.score).persist()
+    val scored = Scorer.score(domainCounts, background, cfg.score).persist()
 
     val (model, _) = Builder.build(scored.withColumnRenamed("domain_count", "count"))
     val bc = spark.sparkContext.broadcast(model)
@@ -135,21 +147,11 @@ object KgPipeline {
       e
     }
 
-    // warc_ts rides THROUGH the tag closure (round-6): the former
-    // tag → join(docs, "docId") re-attached provenance with a corpus-scale
-    // exchange pair, and the TaggedDoc token echo re-serialized every token
-    // string into rows the very next Project dropped — tagSpansTs removes
-    // both (guide §2.4 / §2.3)
-    val docDs = docs.select(col("docId"), col("warc_ts"), col("tokens")).as[graft.model.DocTs]
-    val tagged = Tagger.tagSpansTs(spark, docDs, bc, cfg.tag).toDF()
-
-    // persisted: the mention+co-occurrence union downstream would otherwise
-    // re-run the whole tag scan per branch (production would write this layer)
-    val mentions = tagged
-      .select(col("docId").as("url"), col("warc_ts"), explode(col("spans")).as("s"))
-      .select(col("url"), col("warc_ts"),
-        col("s.start").as("start"), col("s.end").as("end"),
-        col("s.phraseId").as("phrase_id"), col("s.label").as("label"))
+    // warc_ts rides THROUGH the tag closure: no join-back of provenance
+    // after the scan. Persisted: the mention+co-occurrence union downstream
+    // would otherwise re-run the whole tag scan per branch (production would
+    // write this layer)
+    val mentions = Tagger.mentions(Tagger.tagSpansTs(spark, Tagger.docsTs(docs), bc, cfg.tag))
       .persist()
     mentions.count() // tag scan runs while the entity branch is in flight
 
@@ -211,35 +213,23 @@ object KgPipeline {
       lakeRoot: String, buckets: Int = 16,
       background: Option[DataFrame] = None,
       cfg: KgConfig = KgConfig()): DataFrame = {
-    val lake = new graft.lake.LakeTable(spark, lakeRoot)
-    val bucketed = (df: DataFrame, key: String) =>
-      df.withColumn("bucket", pmod(xxhash64(col(key)), lit(buckets.toLong)))
-    // Stage-skipping resume via completion markers: resumableWrite alone makes
-    // a committed stage's WRITE a no-op, but discovering that means computing
-    // the stage's input lineage (the full tag scan, the LSH chain) just to
-    // list its partition values. The markers let a rerun skip whole layers:
+    val lake = new LakeTable(spark, lakeRoot)
+    // Stage-skipping resume via completion markers (LakeTable.commit): a
+    // committed stage's WRITE is a no-op anyway, but discovering that means
+    // computing the stage's input lineage (the full tag scan, the LSH chain)
+    // just to list its partition values. The markers let a rerun skip whole
+    // layers:
     //  - triples complete → return the committed table, zero compute;
     //  - mentions+entities complete → materialize triples from their lake
     //    read-backs (no mine, no tag, no LSH);
     //  - otherwise full build, with the cleaned layer itself marker-guarded.
-    // A crash BETWEEN a stage's write and its marker is safe: the rerun
-    // recomputes that stage's input once, resumableWrite skips the committed
-    // partitions, and the marker lands.
-    // Marker guard: only assert completion for a stage that actually HAS
-    // committed partitions — marking an empty-input stage complete would
-    // poison every future rerun (the marker skips recompute, the read of the
-    // empty stage then throws forever, and the corrected corpus never gets a
-    // chance to rewrite the layer).
-    def writeAndMark(df: DataFrame, key: String, stage: String): Unit = {
-      lake.resumableWrite(bucketed(df, key), "bucket", stage)
-      if (lake.committedPartitions(stage).nonEmpty) lake.markComplete(stage)
-    }
     if (!lake.isComplete("triples")) {
       if (lake.isComplete("mentions") && lake.isComplete("entities")) {
         val mentions = lake.read("mentions")
           .select("url", "warc_ts", "start", "end", "phrase_id", "label")
         val ents = lake.read("entities").select("phrase_id", "entity_id")
-        writeAndMark(Triples.materialize(mentions, ents, cfg.triple), "subj", "triples")
+        lake.commit(Triples.materialize(mentions, ents, cfg.triple)
+          .withColumn("bucket", LakeTable.bucket("subj", buckets)), "bucket", "triples")
       } else {
         // CORPUS-CONSISTENCY GATE. Value-keyed resume assumes a STABLE input
         // snapshot: with any input layer (cleaned/background) incomplete, a
@@ -273,29 +263,23 @@ object KgPipeline {
         // above), scoring feeds from its read-back. An all-`lang` corpus has
         // an EMPTY background: the marker still lands (the empty state is
         // itself the committed decision) and resume feeds an empty frame.
-        if (!lake.isComplete("cleaned")) {
-          lake.resumableWrite(bucketed(cleanedDocs(pages, cfg), "docId"), "bucket", "cleaned")
-          if (lake.committedPartitions("cleaned").nonEmpty) lake.markComplete("cleaned")
-        }
-        if (!lake.isComplete("background")) {
-          lake.resumableWrite(
-            bucketed(background.getOrElse(backgroundFromPages(pages, cfg)), "ngram"),
-            "bucket", "background")
-          lake.markComplete("background")
-        }
+        lake.commit(cleanedDocs(pages, cfg)
+          .withColumn("bucket", LakeTable.bucket("docId", buckets)), "bucket", "cleaned")
+        lake.commit(background.getOrElse(backgroundFromPages(pages, cfg))
+          .withColumn("bucket", LakeTable.bucket("ngram", buckets)), "bucket", "background",
+          emptyIsValid = true)
         val docs = lake.read("cleaned").select("docId", "warc_ts", "tokens")
         val bg =
           if (lake.committedPartitions("background").nonEmpty)
             lake.read("background").select("ngram", "count")
-          else {
-            import org.apache.spark.sql.types._
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType(Seq(StructField("ngram", StringType), StructField("count", LongType))))
-          }
+          else emptyCounts(spark)
         val p = buildFromCleaned(spark, docs, bg, cfg)
-        writeAndMark(p.mentions, "url", "mentions")
-        writeAndMark(p.entities, "entity_id", "entities")
-        writeAndMark(p.triples, "subj", "triples")
+        lake.commit(p.mentions.withColumn("bucket", LakeTable.bucket("url", buckets)),
+          "bucket", "mentions")
+        lake.commit(p.entities.withColumn("bucket", LakeTable.bucket("entity_id", buckets)),
+          "bucket", "entities")
+        lake.commit(p.triples.withColumn("bucket", LakeTable.bucket("subj", buckets)),
+          "bucket", "triples")
         // every layer is on disk now — release the build's persisted
         // intermediates (scored/mentions/entities); without this, repeated
         // checkpointed runs in one session pin dead caches in the

@@ -3,7 +3,7 @@ package graft.lake
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.util.ConcurrentModificationException
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
  *   values a single write may commit: the snapshot log keys lineage per VALUE,
  *   so a caller partitioning by a raw high-cardinality key (url…) would
  *   collect the corpus' distinct values onto the driver and flood the log —
- *   bucket the key (pmod(xxhash64(col), n)) instead, as every shipped caller
+ *   bucket the key ([[LakeTable.bucket]]) instead, as every shipped caller
  *   does. Mirrors Miner.broadcastSurvivorLimit's guard style.
  */
 final class LakeTable(spark: SparkSession, val root: String,
@@ -219,7 +219,7 @@ final class LakeTable(spark: SparkSession, val root: String,
       s"partition column '$partitionCol' has more than $maxPartitionsPerWrite " +
         s"distinct values — the snapshot log records lineage per VALUE, so a " +
         s"raw high-cardinality key floods the driver and the log. Bucket it " +
-        s"(pmod(xxhash64(col(\"$partitionCol\")), n)) or raise maxPartitionsPerWrite.")
+        s"(LakeTable.bucket) or raise maxPartitionsPerWrite.")
     require(!allValRows.exists(_.isNullAt(0)),
       s"null value in partition column '$partitionCol' — the snapshot log keys " +
         "resume on partition VALUES; filter nulls out or fill them before writing")
@@ -290,6 +290,25 @@ final class LakeTable(spark: SparkSession, val root: String,
       }
     Some(snap)
   }
+
+  /** The pipeline commit rule, shared by every checkpointed layer of
+   * KgPipeline.runCheckpointed and Incremental: unless `stage` is already
+   * complete, commit `df` — resumably, or as a partition rewrite for layers
+   * rebuilt whole — and mark the stage complete once it holds a committed
+   * partition. Marking an empty stage complete would poison every rerun (the
+   * marker skips the recompute, the read of the empty stage then throws
+   * forever, and a corrected input never gets to rewrite the layer); only a
+   * layer whose empty state is itself a valid result — a background of an
+   * all-`lang` corpus — sets `emptyIsValid`. A crash between the write and
+   * the marker is safe: the rerun recomputes the stage's input once, the
+   * resumable write skips the committed partitions, and the marker lands.
+   * `df` is by-name, so a complete stage costs no lineage at all. */
+  def commit(df: => DataFrame, partitionCol: String, stage: String,
+      rewrite: Boolean = false, emptyIsValid: Boolean = false): Unit =
+    if (!isComplete(stage)) {
+      write(df, partitionCol, stage, force = rewrite)
+      if (emptyIsValid || committedPartitions(stage).nonEmpty) markComplete(stage)
+    }
 
   /** Inverse of Hive's path-name escaping (%xx for reserved chars). */
   private def unescapePathName(s: String): String = {
@@ -490,6 +509,12 @@ final class LakeTable(spark: SparkSession, val root: String,
 }
 
 object LakeTable {
+  /** The bucket of a row: the key's xxhash64, non-negative modulo
+   * `buckets` — a BIGINT in [0, buckets). Every pipeline layer partitions by
+   * it, so a raw high-cardinality key never reaches the snapshot log. */
+  def bucket(key: String, buckets: Int): Column =
+    pmod(xxhash64(col(key)), lit(buckets.toLong))
+
   /** Internal OCC signal: publishAt retracted a link that landed below a
    * concurrently-advanced checkpoint horizon; publishOcc retries at the new
    * head (the cache was already refreshed). */

@@ -315,10 +315,6 @@ object Entropy {
       .na.fill(Double.NegativeInfinity, Seq("pmi"))
   }
 
-  /** Legacy single-extension-table signature: both sides read `extensions`. */
-  def score(candidates: DataFrame, unigrams: DataFrame, extensions: DataFrame): DataFrame =
-    score(candidates, unigrams, extensions, extensions)
-
   /** Convenience: filter mined candidates over a tokenized corpus, with the
    * candidate-bounded extension mine (see boundedExtensions). */
   def filterCandidates(docs: DataFrame, tokensCol: String, candidates: DataFrame,

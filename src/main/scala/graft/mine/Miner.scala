@@ -39,7 +39,10 @@ object Miner {
   }
 
   /** Column expression: ARRAY<STRING> tokens → ARRAY<STRING> of space-joined
-   * n-grams for all n in [minN, maxN], lowercased.
+   * n-grams for all n in [minN, maxN], lowercased. Not on the mine path
+   * (`mine` hashes grams natively). It stays for two users: NGramsGeneratorSpec
+   * uses it as the reference twin of the native `ngrams` generator, and
+   * Entropy's extension fallback (`boundedExtensions`) walks grams with it.
    *
    * Wrapped in one outer lambda binding the lowercased array ONCE: naive nesting
    * re-evaluates `transform(tokens, lower)` inside every per-gram lambda
@@ -344,17 +347,6 @@ object Miner {
       obs.get("extracted").asInstanceOf[Long],
       afterFilter())
     (result, statsFn)
-  }
-
-  /** Mining stats (SURVEY.md A3), one aggregate pass. */
-  def stats(docs: DataFrame, tokensCol: String, mined: DataFrame,
-      cfg: MineConfig): MiningStats = {
-    val row = docs.agg(
-      count(lit(1)).as("n_docs"),
-      coalesce(sum(size(col(tokensCol))), lit(0L)).as("n_tokens"),
-      coalesce(sum(size(ngramsCol(col(tokensCol), cfg.minN, cfg.maxN))), lit(0L))
-        .as("n_extracted")).head()
-    MiningStats(row.getLong(0), row.getLong(1), row.getLong(2), mined.count())
   }
 
   final case class MiningStats(totalDocs: Long, totalTokens: Long,

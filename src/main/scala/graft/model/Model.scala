@@ -10,7 +10,7 @@ package graft.model
  *  - ScoredPhrase: ext/phrasekit/src/bin/phrasekit_score.rs:46-54
  *  - Payload:      ext/phrasekit/src/payload.rs:4-10 (17-byte LE record)
  *  - Span:         ext/phrasekit/src/bin/phrasekit_tag.rs:53-59 (half-open [start,end))
- *  - TaggedDoc:    ext/phrasekit/src/bin/phrasekit_tag.rs:46-51
+ *  - TaggedSpansTs: ext/phrasekit/src/bin/phrasekit_tag.rs:46-51, without the token echo
  *  - WebPage:      BASELINE.json input_hint (url, warc_ts, html, text, lang)
  */
 
@@ -48,23 +48,15 @@ final case class Span(start: Int, end: Int, phraseId: Int, label: String)
 /** A raw (pre-policy) match: half-open token interval + dense pattern index. */
 final case class RawMatch(start: Int, end: Int, patternId: Int)
 
-/** Tagged document: input doc + resolved spans. */
-final case class TaggedDoc(docId: String, tokens: Seq[String], spans: Seq[Span])
-
-/** Tag-stage output WITHOUT the token echo — the shape every pipeline
- * consumer actually reads (they all explode `spans` and drop `tokens`).
- * For an opaque mapPartitions Catalyst cannot prune the unused field out of
- * the closure's output: emitting TaggedDoc re-serializes every token string
- * into the output row just for the downstream Project to discard — a full
- * second pass of the corpus' token bytes through the serializer (round-6;
- * see Tagger.tagSpans). */
-final case class TaggedSpans(docId: String, spans: Seq[Span])
-
-/** A tokenized doc with its crawl timestamp, for tag passes that carry
- * provenance THROUGH the tag closure instead of re-joining it afterwards. */
+/** A tokenized doc with its crawl timestamp (null when the caller has none),
+ * the input of the one tag function, `Tagger.tagSpansTs`: provenance rides
+ * THROUGH the tag closure instead of being re-joined afterwards. */
 final case class DocTs(docId: String, warc_ts: java.sql.Timestamp, tokens: Seq[String])
 
-/** [[TaggedSpans]] with the carried crawl timestamp. */
+/** Tag-stage output: the doc's resolved spans and its carried crawl timestamp,
+ * WITHOUT the token echo — for an opaque mapPartitions Catalyst cannot prune
+ * an unused field out of the closure's output, so echoing the tokens would
+ * re-serialize every token string into rows the next Project discards. */
 final case class TaggedSpansTs(docId: String, warc_ts: java.sql.Timestamp, spans: Seq[Span])
 
 /** Common-Crawl-style web page row (BASELINE.json input_hint). */

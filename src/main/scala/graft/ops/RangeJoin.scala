@@ -35,24 +35,11 @@ object RangeJoin {
    *                    for timestamps)
    * @param maxBucketsPerInterval loud-failure bound on the per-interval
    *                    explode factor (checked declaratively, per row)
-   * @param preFilterPoints when true, first computes the intervals' global
-   *                    [min lo, max hi) envelope (one scalar-aggregate job
-   *                    over the interval side — interval-scale, not
-   *                    point-scale) and drops points outside it BEFORE the
-   *                    bucket join (guide §3.2's pre-filter-the-big-side
-   *                    pattern, degenerate-Bloom form: one interval range
-   *                    instead of a filter). Free-ish when points mostly
-   *                    fall inside the envelope; a large win when the point
-   *                    table's time range dwarfs the intervals'. Default off:
-   *                    it costs one extra (small) Spark job per call, which
-   *                    at probe-heavy call sites may exceed the saving —
-   *                    callers that know their point range is wide opt in.
    * @return points.* ++ intervals.* for every containment pair
    */
   def pointInInterval(points: DataFrame, ptCol: String, intervals: DataFrame,
       loCol: String, hiCol: String, bucketWidth: Double,
-      maxBucketsPerInterval: Long = 10000L,
-      preFilterPoints: Boolean = false): DataFrame = {
+      maxBucketsPerInterval: Long = 10000L): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
     val collisions = points.columns.toSet.intersect(intervals.columns.toSet)
     require(collisions.isEmpty,
@@ -86,22 +73,7 @@ object RangeJoin {
           (hiB - loB + lit(1L)).cast("string"),
           lit(s" buckets (> $maxBucketsPerInterval) — widen bucketWidth " +
             s"($bucketWidth) or split the interval upstream"))))))
-    // optional global-envelope pre-filter of the point side (see @param):
-    // null bounds mean no well-formed interval exists — every interval row
-    // drops at the explode anyway, so the unfiltered join is already empty
-    // and the filter is skipped rather than special-cased
-    val pts =
-      if (!preFilterPoints) points
-      else {
-        val bounds = intervals
-          .agg(min(asNum(intervals, loCol)).as("__lo"), max(asNum(intervals, hiCol)).as("__hi"))
-          .head()
-        if (bounds.isNullAt(0) || bounds.isNullAt(1)) points
-        else points.filter(
-          asNum(points, ptCol) >= bounds.getDouble(0) &&
-            asNum(points, ptCol) < bounds.getDouble(1))
-      }
-    pts.withColumn("__bucket", bucketOf(asNum(pts, ptCol)))
+    points.withColumn("__bucket", bucketOf(asNum(points, ptCol)))
       .join(guarded, Seq("__bucket"))
       .filter(col(ptCol) >= col(loCol) && col(ptCol) < col(hiCol))
       .drop("__bucket")

@@ -8,7 +8,6 @@ import graft.artifact.{Builder, TagModel}
 import graft.corpus.Extract
 import graft.kg.{ConnectedComponents, Graph, Linker, Triples}
 import graft.mine.Miner
-import graft.model.Doc
 import graft.score.Scorer
 import graft.ops.Ids
 import graft.tag.Tagger
@@ -95,17 +94,13 @@ object Queries {
    * with strictPolicy. */
   def mentions(s: SparkSession, dir: String, policy: String,
       lax: Boolean = false): DataFrame = cached(s"mentions|$policy|$lax|$dir") {
-    import s.implicits._
-    val model = tagModel(s, dir, lax)
-    val bc = s.sparkContext.broadcast(model)
-    val ds = toks(s, dir, Some(true))
-      .select(col("doc_id").cast("string").as("docId"), col("t").as("tokens")).as[Doc]
-    val tagged = Tagger.tagSpans(s, ds, bc,
-      Tagger.TagConfig(policy, maxSpans = 1 << 30, strictPolicy = policy == "salience_max"))
-    tagged.toDF()
-      .select(col("docId").cast("long").as("doc_id"), explode(col("spans")).as("sp"))
-      .select(col("doc_id"), col("sp.start").cast("long").as("start"),
-        col("sp.end").cast("long").as("end"), col("sp.phraseId").as("phrase_id"))
+    val bc = s.sparkContext.broadcast(tagModel(s, dir, lax))
+    val docs = toks(s, dir, Some(true))
+      .select(col("doc_id").cast("string").as("docId"), col("t").as("tokens"))
+    Tagger.mentions(Tagger.tagSpansTs(s, Tagger.docsTs(docs), bc,
+      Tagger.TagConfig(policy, maxSpans = 1 << 30, strictPolicy = policy == "salience_max")))
+      .select(col("url").cast("long").as("doc_id"), col("start").cast("long").as("start"),
+        col("end").cast("long").as("end"), col("phrase_id"))
       .join(scoredFor(s, dir, lax)
         .select(col("phrase_id").cast("int").as("phrase_id"), col("ngram")), Seq("phrase_id"))
       .select("doc_id", "start", "end", "ngram")

@@ -73,11 +73,9 @@ object MentionStream {
         "the wiped-checkpoint/grown-input guard (wipe one, not the other, and " +
         "the ledger protects a checkpoint that no longer exists)")
     val lake = table.getOrElse(new LakeTable(spark, lakeRoot))
-    val mentions = Tagger.tagSpans(spark, docs, bc, cfg).toDF()
-      .select(col("docId").as("url"), explode(col("spans")).as("s"))
-      .select(col("url"),
-        col("s.start").as("start"), col("s.end").as("end"),
-        col("s.phraseId").as("phrase_id"), col("s.label").as("label"))
+    // a stream carries no crawl time: tag with a null warc_ts, commit without it
+    val mentions = Tagger.mentions(Tagger.tagSpansTs(spark, Tagger.docsTs(docs.toDF()), bc, cfg))
+      .drop("warc_ts")
     val batchStage = s"${stage}__batches"
     val commit: (DataFrame, Long) => Unit = { (batch0, batchId) =>
       // persist: foreachBatch's DataFrame re-executes the batch transform per
@@ -117,8 +115,7 @@ object MentionStream {
             .withColumn("part", lit(key)), "part", batchStage)
         }
         val keyed = batch.withColumn("part",
-          concat_ws("-", lit(batchId),
-            pmod(xxhash64(col("url")), lit(buckets.toLong))))
+          concat_ws("-", lit(batchId), LakeTable.bucket("url", buckets)))
         lake.resumableWrite(keyed, "part", stage)
         if (compactMetadataEvery > 0 && (batchId + 1) % compactMetadataEvery == 0)
           lake.compactMetadata()

@@ -1,10 +1,11 @@
 package graft.tag
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions._
 import graft.artifact.TagModel
 import graft.matching.{Policies, Policy}
-import graft.model.{Doc, DocTs, RawMatch, Span, TaggedDoc, TaggedSpans, TaggedSpansTs}
+import graft.model.{DocTs, RawMatch, Span, TaggedSpansTs}
 
 /**
  * Corpus auto-labeling (SURVEY.md §3.3, the flagship) — Spark re-expression of
@@ -15,9 +16,14 @@ import graft.model.{Doc, DocTs, RawMatch, Span, TaggedDoc, TaggedSpans, TaggedSp
  * tokens (broadcast vocab lookup — the reference's J2 "join" collapsed into the
  * same closure, exactly like its artifact bundle), scans with Aho-Corasick (J3),
  * resolves overlaps per policy (W1-W4), truncates to max_spans (W5), and emits
- * TaggedDoc. ZERO shuffles: the only cross-node movement is the broadcast itself,
- * so the stage scales linearly with executors — the property the scaling-
- * efficiency criterion measures.
+ * the doc's spans. ZERO shuffles: the only cross-node movement is the broadcast
+ * itself, so the stage scales linearly with executors — the property the
+ * scaling-efficiency criterion measures.
+ *
+ * [[tagSpansTs]] is the one Dataset-level tag function; [[mentions]] is the one
+ * projection of its output to mention rows. Every caller — KgPipeline,
+ * Incremental, MentionStream, the oracle-checked queries — goes through both; callers
+ * with no crawl time tag with a null `warc_ts` ([[docsTs]]).
  */
 object Tagger {
 
@@ -31,56 +37,21 @@ object Tagger {
 
   /** Pure per-doc tagging: the reference's per-line body (phrasekit_tag.rs:146-211). */
   def tagDoc(model: TagModel, policy: Policy, maxSpans: Int, label: String)(
-      doc: Doc): TaggedDoc = {
-    val ids = model.vocab.encodeAll(doc.tokens)
+      tokens: Seq[String]): Seq[Span] = {
+    val ids = model.vocab.encodeAll(tokens)
     val raw = model.trie.findOverlapping(ids)
     val resolved = Policies.truncate(
       Policies.resolve(raw.toIndexedSeq, policy, model.payloads), maxSpans)
-    TaggedDoc(doc.docId, doc.tokens,
-      resolved.map(m => Span(m.start, m.end, model.payloads(m.patternId).phraseId, label)))
+    resolved.map(m => Span(m.start, m.end, model.payloads(m.patternId).phraseId, label))
   }
 
   /** Tag a corpus. Strict schema (doc_id required), matching the tag CLI's
-   * fail-fast parse (phrasekit_tag.rs:146). */
-  def tag(spark: SparkSession, docs: Dataset[Doc], model: Broadcast[TagModel],
-      cfg: TagConfig = TagConfig()): Dataset[TaggedDoc] = {
-    import spark.implicits._
-    val policy =
-      if (cfg.strictPolicy) Policy.fromString(cfg.policy) else Policy.fromStringTag(cfg.policy)
-    val maxSpans = cfg.maxSpans
-    val label = cfg.label
-    docs.mapPartitions { it =>
-      val m = model.value
-      it.map(tagDoc(m, policy, maxSpans, label))
-    }
-  }
-
-  /** As [[tag]] but emitting ONLY (docId, spans) — no token echo. Every
-   * pipeline consumer (KgPipeline, MentionStream, Incremental, the driver
-   * queries) explodes `spans` and drops `tokens`, but an opaque mapPartitions
-   * defeats column pruning (guide §2.3): emitting TaggedDoc re-serializes the
-   * corpus' token bytes into output rows a Project immediately discards.
-   * Span semantics identical to [[tag]] (same tagDoc kernel). */
-  def tagSpans(spark: SparkSession, docs: Dataset[Doc], model: Broadcast[TagModel],
-      cfg: TagConfig = TagConfig()): Dataset[TaggedSpans] = {
-    import spark.implicits._
-    val policy =
-      if (cfg.strictPolicy) Policy.fromString(cfg.policy) else Policy.fromStringTag(cfg.policy)
-    val maxSpans = cfg.maxSpans
-    val label = cfg.label
-    docs.mapPartitions { it =>
-      val m = model.value
-      it.map { d =>
-        val t = tagDoc(m, policy, maxSpans, label)(d)
-        TaggedSpans(t.docId, t.spans)
-      }
-    }
-  }
-
-  /** As [[tagSpans]] with the doc's crawl timestamp carried THROUGH the
-   * closure — replaces the KG pipeline's corpus-scale join-back of
-   * provenance (mentions ⋈ docs exchange pair on docId) with a pass-through
-   * field (guide §2.4: remove shuffles outright). */
+   * fail-fast parse (phrasekit_tag.rs:146). The output carries the doc's
+   * crawl timestamp THROUGH the closure — no corpus-scale join-back of
+   * provenance after the scan (guide §2.4) — and no token echo: an opaque
+   * mapPartitions defeats column pruning (guide §2.3), so echoing the tokens
+   * would re-serialize the corpus' token bytes into rows the next Project
+   * discards. */
   def tagSpansTs(spark: SparkSession, docs: Dataset[DocTs], model: Broadcast[TagModel],
       cfg: TagConfig = TagConfig()): Dataset[TaggedSpansTs] = {
     import spark.implicits._
@@ -90,23 +61,34 @@ object Tagger {
     val label = cfg.label
     docs.mapPartitions { it =>
       val m = model.value
-      it.map { d =>
-        val t = tagDoc(m, policy, maxSpans, label)(Doc(d.docId, d.tokens))
-        TaggedSpansTs(t.docId, d.warc_ts, t.spans)
-      }
+      it.map(d => TaggedSpansTs(d.docId, d.warc_ts, tagDoc(m, policy, maxSpans, label)(d.tokens)))
     }
   }
 
+  /** The tag input of a (docId, tokens[, warc_ts]) frame: a frame without a
+   * crawl time tags with a null `warc_ts`. */
+  def docsTs(docs: DataFrame): Dataset[DocTs] = {
+    val ts = if (docs.columns.contains("warc_ts")) col("warc_ts") else lit(null).cast("timestamp")
+    docs.select(col("docId"), ts.as("warc_ts"), col("tokens")).as(Encoders.product[DocTs])
+  }
+
+  /** The mention projection of a tag pass: one (url, warc_ts, start, end,
+   * phrase_id, label) row per span, the doc id as url. */
+  def mentions(tagged: Dataset[TaggedSpansTs]): DataFrame =
+    tagged.toDF()
+      .select(col("docId").as("url"), col("warc_ts"), explode(col("spans")).as("s"))
+      .select(col("url"), col("warc_ts"),
+        col("s.start").as("start"), col("s.end").as("end"),
+        col("s.phraseId").as("phrase_id"), col("s.label").as("label"))
+
   /** Tagging stats (SURVEY.md A5) over a tagged corpus, one aggregate pass. */
   def stats(tagged: DataFrame): TaggingStats = {
-    import org.apache.spark.sql.functions._
     val r = tagged.agg(
       count(lit(1)),
       coalesce(sum(size(col("spans"))), lit(0L)),
       coalesce(sum(when(size(col("spans")) > 0, 1L).otherwise(0L)), lit(0L))).head()
     TaggingStats(r.getLong(0), r.getLong(1), r.getLong(2))
   }
-
   final case class TaggingStats(documents: Long, totalSpans: Long, docsWithSpans: Long) {
     def avgSpansPerDoc: Double = if (documents > 0) totalSpans.toDouble / documents else 0.0
   }

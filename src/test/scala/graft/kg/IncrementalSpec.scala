@@ -46,6 +46,14 @@ class IncrementalSpec extends SparkSuite {
 
   private type Row = org.apache.spark.sql.Row
 
+  /** (rows, order-independent xxhash64 sum) over every triple column. */
+  private def tripleDigest(df: DataFrame): (Long, java.math.BigDecimal) = {
+    val r = df.agg(count(lit(1)), coalesce(sum(
+        xxhash64(col("subj"), col("pred"), col("obj"), col("url"), col("warc_ts"))
+          .cast("decimal(38,0)")), lit(0).cast("decimal(38,0)"))).head()
+    (r.getLong(0), r.getDecimal(1))
+  }
+
   test("bootstrap + addEpoch == full rebuild on the union corpus, re-tagging " +
       "only affected docs (leftmost_longest)") {
     val lakeRoot = root()
@@ -182,5 +190,38 @@ class IncrementalSpec extends SparkSuite {
       sortedMentions(full.mentions))
     full.phrases.unpersist(); full.mentions.unpersist()
     full.entities.unpersist(); full.docs.unpersist()
+  }
+
+  test("empty background (all-`lang` corpus): markers land, triples equal the build, " +
+      "a rerun publishes nothing") {
+    // no non-`lang` page: the background layers of both checkpointed
+    // orchestrators commit no partition, their markers still land (the empty
+    // table is the result), and scoring runs against the empty count table
+    val pages = Synth.corpus(spark, 300, partitions = 4).filter(col("lang") === "en")
+    val cfg = KgPipeline.KgConfig()
+    val full = KgPipeline.build(spark, pages, None, cfg)
+    val want = tripleDigest(full.triples)
+    assert(want._1 > 0, "the corpus must yield triples")
+    full.phrases.unpersist(); full.mentions.unpersist()
+    full.entities.unpersist(); full.docs.unpersist()
+
+    val ckRoot = root()
+    val incRoot = root()
+    assert(tripleDigest(KgPipeline.runCheckpointed(spark, pages, ckRoot, buckets = 4,
+      cfg = cfg)) == want)
+    Incremental.bootstrap(spark, pages, incRoot, buckets = 4, cfg = cfg)
+    assert(tripleDigest(Incremental.triples(spark, incRoot)) == want)
+    for ((r, stage) <- Seq(ckRoot -> "background", incRoot -> "background_counts")) {
+      val lake = new graft.lake.LakeTable(spark, r)
+      assert(lake.isComplete(stage), s"$stage marker missing")
+      assert(lake.committedPartitions(stage).isEmpty, s"$stage committed data")
+    }
+
+    def versions(r: String) = new graft.lake.LakeTable(spark, r).snapshots.map(_.version)
+    val (ck1, inc1) = (versions(ckRoot), versions(incRoot))
+    KgPipeline.runCheckpointed(spark, pages, ckRoot, buckets = 4, cfg = cfg)
+    Incremental.bootstrap(spark, pages, incRoot, buckets = 4, cfg = cfg)
+    assert(versions(ckRoot) == ck1, "checkpointed rerun published a snapshot")
+    assert(versions(incRoot) == inc1, "bootstrap rerun published a snapshot")
   }
 }

@@ -17,10 +17,13 @@ class EntropySpec extends SparkSuite {
   private lazy val cands =
     Miner.mine(docs, "t", Miner.MineConfig(2, 2, 2, ordered = false)).select("ngram", "count")
 
+  private lazy val ext3 =
+    Miner.mine(docs, "t", Miner.MineConfig(3, 3, 1, ordered = false)).select("ngram", "count")
+
   private lazy val scoredDf =
     Entropy.score(cands,
       Miner.mine(docs, "t", Miner.MineConfig(1, 1, 1, ordered = false)).select("ngram", "count"),
-      Miner.mine(docs, "t", Miner.MineConfig(3, 3, 1, ordered = false)).select("ngram", "count"))
+      ext3, ext3)
 
   test("PMI = log2(c(g)·T^(n−1)/Πc(wi)) — hand value for 'a b' and 'b c'") {
     val m = scoredDf.select("ngram", "pmi").as[(String, Double)].collect().toMap
@@ -85,7 +88,7 @@ class EntropySpec extends SparkSuite {
       .as[(String, Double, Double, Double)].collect().toSet
     val legacy = Entropy.score(cands,
         Miner.mine(docs, "t", Miner.MineConfig(1, 1, 1, ordered = false)).select("ngram", "count"),
-        Miner.mine(docs, "t", Miner.MineConfig(3, 3, 1, ordered = false)).select("ngram", "count"))
+        ext3, ext3)
       .filter(col("pmi") >= 1.0 &&
         greatest(col("left_entropy"), col("right_entropy")) >= 0.5)
       .select("ngram", "pmi", "left_entropy", "right_entropy")
@@ -109,9 +112,11 @@ class EntropySpec extends SparkSuite {
     val single = Seq(Seq("p", "q")).toDF("t")
     val c1 = Miner.mine(single, "t", Miner.MineConfig(2, 2, 1, ordered = false))
       .select("ngram", "count")
+    val ext = Miner.mine(single, "t", Miner.MineConfig(3, 3, 1, ordered = false))
+      .select("ngram", "count")
     val out = Entropy.score(c1,
       Miner.mine(single, "t", Miner.MineConfig(1, 1, 1, ordered = false)).select("ngram", "count"),
-      Miner.mine(single, "t", Miner.MineConfig(3, 3, 1, ordered = false)).select("ngram", "count"))
+      ext, ext)
       .select("ngram", "left_entropy", "right_entropy").as[(String, Double, Double)].collect()
     assert(out.toSeq == Seq(("p q", 0.0, 0.0)))
   }

@@ -60,7 +60,6 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming tag == batch tag: the zero-shuffle broadcast stage is stream-native") {
     import graft.corpus.Extract
-    import graft.model.Doc
     import graft.tag.Tagger
     // bounded corpus dir (en docs only, as the tag stage consumes)
     val docsDir = Files.createTempDirectory("graft-docs-stream").toString
@@ -78,15 +77,13 @@ class StreamingSpec extends SparkSuite {
       scored.withColumnRenamed("domain_count", "count"))._1
     val bc = spark.sparkContext.broadcast(model)
 
-    def toDocs(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("doc_id").cast("string").as("docId"),
-        Extract.tokenize(col("text")).as("tokens")).as[Doc]
+    def mentions(df: org.apache.spark.sql.DataFrame) = Tagger.mentions(
+      Tagger.tagSpansTs(spark, Tagger.docsTs(df.select(col("doc_id").cast("string").as("docId"),
+        Extract.tokenize(col("text")).as("tokens"))), bc))
+      .select("url", "start", "end", "phrase_id")
     // streaming side: readStream → tag (mapPartitions) → memory sink
     val stream = spark.readStream.schema(docs.schema).parquet(docsDir)
-    val taggedStream = Tagger.tag(spark, toDocs(stream), bc)
-    val q = taggedStream.toDF()
-      .select(col("docId"), explode(col("spans")).as("sp"))
-      .select(col("docId"), col("sp.start"), col("sp.end"), col("sp.phraseId"))
+    val q = mentions(stream)
       .writeStream.format("memory").queryName("tag_stream_out")
       .outputMode(OutputMode.Append())
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -95,9 +92,7 @@ class StreamingSpec extends SparkSuite {
     val streamed = spark.table("tag_stream_out")
       .as[(String, Int, Int, Int)].collect().toSet
     // batch side: identical code path on the same files
-    val batch = Tagger.tag(spark, toDocs(spark.read.parquet(docsDir)), bc).toDF()
-      .select(col("docId"), explode(col("spans")).as("sp"))
-      .select(col("docId"), col("sp.start"), col("sp.end"), col("sp.phraseId"))
+    val batch = mentions(spark.read.parquet(docsDir))
       .as[(String, Int, Int, Int)].collect().toSet
     assert(streamed == batch && batch.nonEmpty)
   }

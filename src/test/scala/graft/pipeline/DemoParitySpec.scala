@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.artifact.{Builder, PayloadIO, Vocab}
 import graft.mine.Miner
-import graft.model.Doc
+import graft.model.{Doc, DocTs}
 import graft.score.Scorer
 import graft.tag.Tagger
 
@@ -39,6 +39,9 @@ class DemoParitySpec extends SparkSuite {
   private val background = Seq(
     ("for the", 50000L), ("in the", 30000L), ("to the", 25000L),
     ("lysis buffer", 8L), ("western blot", 5L)).toDF("ngram", "count")
+
+  /** The corpus as tag input: no crawl time. */
+  private def corpusTs = corpus.map(d => DocTs(d.docId, null, d.tokens)).toDS()
 
   private lazy val mined =
     Miner.mine(corpus.toDF(), "tokens", Miner.MineConfig(2, 5, minCount = 2))
@@ -111,7 +114,7 @@ class DemoParitySpec extends SparkSuite {
 
   test("tagged spans match hand-derived reference semantics (leftmost_longest)") {
     val bc = spark.sparkContext.broadcast(model)
-    val tagged = Tagger.tag(spark, corpus.toDS(), bc).collect()
+    val tagged = Tagger.tagSpansTs(spark, corpusTs, bc).collect()
       .map(t => t.docId -> t.spans.map(s => (s.start, s.end, s.label))).toMap
     assert(tagged("doc_1") == Seq((1, 4, "PHRASE")))  // rat cdk10 oligo
     assert(tagged("doc_2") == Seq((1, 4, "PHRASE")))  // protein assay buffer
@@ -125,7 +128,7 @@ class DemoParitySpec extends SparkSuite {
     assert(tagged("doc_10") == Seq())
     // span → token-sequence parity: the tagged tokens equal the phrase tokens
     val byId = model.payloads.map(p => p.phraseId -> p).toMap
-    val full = Tagger.tag(spark, corpus.toDS(), bc).collect()
+    val full = Tagger.tagSpansTs(spark, corpusTs, bc).collect()
     full.foreach { t =>
       t.spans.foreach { s =>
         assert(s.end - s.start == byId(s.phraseId).n.toInt)
@@ -135,7 +138,7 @@ class DemoParitySpec extends SparkSuite {
 
   test("tagging stats (A5)") {
     val bc = spark.sparkContext.broadcast(model)
-    val st = Tagger.stats(Tagger.tag(spark, corpus.toDS(), bc).toDF())
+    val st = Tagger.stats(Tagger.tagSpansTs(spark, corpusTs, bc).toDF())
     assert(st == Tagger.TaggingStats(10, 7, 6))
     assert(math.abs(st.avgSpansPerDoc - 0.7) < 1e-9)
   }
@@ -167,7 +170,7 @@ class DemoParitySpec extends SparkSuite {
   }
 
   test("mining stats + min_count monotonicity (spec/miner_spec.rb:76-99)") {
-    val st = Miner.stats(corpus.toDF(), "tokens", mined, Miner.MineConfig(2, 5, 2))
+    val st = Miner.mineWithStats(corpus.toDF(), "tokens", Miner.MineConfig(2, 5, 2))._2()
     assert(st.totalDocs == 10)
     assert(st.totalTokens == corpus.map(_.tokens.length).sum)
     val lower = Miner.mine(corpus.toDF(), "tokens", Miner.MineConfig(2, 5, 1)).count()

@@ -63,12 +63,10 @@ class MentionStreamSpec extends SparkSuite {
       .select("url", "start", "end", "phrase_id")
       .as[(String, Int, Int, Int)].collect().toSet
 
-    val batch = Tagger.tag(spark,
-        docs.select(col("doc_id").cast("string").as("docId"),
-          Extract.tokenize(col("text")).as("tokens")).as[graft.model.Doc], bc)
-      .toDF()
-      .select(col("docId").as("url"), explode(col("spans")).as("s"))
-      .select(col("url"), col("s.start"), col("s.end"), col("s.phraseId"))
+    val batch = Tagger.mentions(Tagger.tagSpansTs(spark,
+        Tagger.docsTs(docs.select(col("doc_id").cast("string").as("docId"),
+          Extract.tokenize(col("text")).as("tokens"))), bc))
+      .select("url", "start", "end", "phrase_id")
       .as[(String, Int, Int, Int)].collect().toSet
     assert(streamed == batch && batch.nonEmpty)
 
